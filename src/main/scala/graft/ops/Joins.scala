@@ -30,7 +30,16 @@ object Joins {
   /** J3 — interval join (`DwdTradeOrderPaySucDetail.intervalJoin:119-144`,
     * range :141): `l.key = r.key AND l.ts BETWEEN r.ts - lower AND r.ts + upper`
     * with epoch-ms columns. The equi-key keeps the plan a keyed join (shuffle by
-    * key), never a cartesian; in streaming the same bounds prune join state. */
+    * key), never a cartesian.
+    *
+    * Streaming: with both inputs watermarked, the global watermark follows
+    * Spark's default `spark.sql.streaming.multipleWatermarkPolicy=min`, the
+    * policy this engine keeps: the join never drops a row as late while one
+    * input lags, but an IDLE input stops the watermark from advancing
+    * (`StreamJoinSpec` "idle input"). Spark derives a state-eviction bound
+    * only from a range over the watermarked TIMESTAMP columns; over epoch-ms
+    * columns it derives none, so this form keeps its join state for as long
+    * as the query runs. */
   def interval(
       left: DataFrame, right: DataFrame,
       eqKey: (Column, Column),

@@ -21,6 +21,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * group memory is the key's pattern-events in THAT batch only (the batch
   * twin holds the key's full history instead — the streaming form is the
   * cheaper one at any horizon).
+  *
+  * Every form below is one `flatMapGroupsWithState` operator, so it runs on
+  * any state-store provider (the HDFS-backed default or RocksDB).
   */
 object CepStream {
 
@@ -29,16 +32,14 @@ object CepStream {
   /** st = stages matched so far; t0 = partial-match start (0 when st = 0). */
   final case class CepState(st: Int, t0: Long)
 
-  /** The basic automaton over one key's events — ONE step loop shared by
-    * the `flatMapGroupsWithState` form ([[matchGroup]]) and the
-    * `transformWithState` twin ([[CepStreamTws]]), so the two state APIs
-    * cannot drift. Sorts, folds from `init`, emits completed matches,
-    * returns the post-group state. */
-  private[streaming] def runBasic(pattern: IndexedSeq[String],
-      withinMs: Long, k: Long, events: Iterator[CepEvent], init: CepState,
-      out: ListBuffer[CepMatch]): CepState = {
+  /** One micro-batch group: sort, run the automaton from stored state,
+    * store the final (st, t0), emit completed matches. */
+  def matchGroup(pattern: IndexedSeq[String], withinMs: Long)(
+      k: Long, events: Iterator[CepEvent],
+      state: GroupState[CepState]): Iterator[CepMatch] = {
+    val out = ListBuffer.empty[CepMatch]
     val sorted = events.toSeq.sortBy(e => (e.tms, e.oid, e.ty))
-    var s = init
+    var s = state.getOption.getOrElse(CepState(0, 0L))
     sorted.foreach { e =>
       // Flink-NFA boundary: a run times out at span >= window (a match
       // whose span exactly equals the window does not complete)
@@ -50,17 +51,6 @@ object CepStream {
         } else s = CepState(s.st + 1, start)
       }
     }
-    s
-  }
-
-  /** One micro-batch group: sort, run the automaton from stored state,
-    * store the final (st, t0), emit completed matches. */
-  def matchGroup(pattern: IndexedSeq[String], withinMs: Long)(
-      k: Long, events: Iterator[CepEvent],
-      state: GroupState[CepState]): Iterator[CepMatch] = {
-    val out = ListBuffer.empty[CepMatch]
-    val s = runBasic(pattern, withinMs, k, events,
-      state.getOption.getOrElse(CepState(0, 0L)), out)
     state.update(s)
     out.iterator
   }
@@ -139,12 +129,6 @@ object CepStream {
     val wm = ds.withColumn("__et", timestamp_millis(col("tms")))
       .withWatermark("__et", delay)
       .as[CepEvent]
-    // same dispatcher as [[attach]] (r12 item 4): the tws twin runs the
-    // SAME NegStepper with explicit event-time timers over the same
-    // watermark — CepStreamTwsSpec pins record-for-record parity
-    if (StateImpl.useTws(ds.sparkSession))
-      return CepStreamTws.attachNegWatermarked(wm, pattern, withinMs,
-        notBetween.map { case (i, ts) => i -> ts.toSet }, notAfter.toSet)
     wm.groupByKey(_.k)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(
@@ -163,15 +147,13 @@ object CepStream {
     * (and may re-open a stage-0 run). Feed it the UNFILTERED keyed
     * stream: strict adjacency makes every event state-relevant, so
     * unlike [[matchGroup]] there is no type pre-filter contract. */
-  /** The strict-contiguity step loop — ONE body shared by the fMGWS
-    * wrapper below and the tws twin ([[CepStreamTws.attachNext]]). */
-  private[streaming] def runNext(pattern: IndexedSeq[String],
-      withinMs: Long, nextStages: Set[Int],
-      notNext: Map[Int, Set[String]])(
-      k: Long, events: Iterator[CepEvent], init: CepNextState,
-      out: ListBuffer[CepMatch]): CepNextState = {
+  def matchGroupNext(pattern: IndexedSeq[String], withinMs: Long,
+      nextStages: Set[Int], notNext: Map[Int, Set[String]])(
+      k: Long, events: Iterator[CepEvent],
+      state: GroupState[CepNextState]): Iterator[CepMatch] = {
+    val out = ListBuffer.empty[CepMatch]
     val sorted = events.toSeq.sortBy(e => (e.tms, e.oid, e.ty))
-    var s = init
+    var s = state.getOption.getOrElse(CepNextState(0, 0L, fr = false))
     // shared StrictStepper — one step object with the batch sorted plan
     val stepper = new graft.ops.Cep.StrictStepper(pattern, withinMs,
       nextStages, notNext)
@@ -180,16 +162,6 @@ object CepStream {
         (st0, en) => out += CepMatch(k, st0, en))
       s = CepNextState(next._1, next._2, next._3)
     }
-    s
-  }
-
-  def matchGroupNext(pattern: IndexedSeq[String], withinMs: Long,
-      nextStages: Set[Int], notNext: Map[Int, Set[String]])(
-      k: Long, events: Iterator[CepEvent],
-      state: GroupState[CepNextState]): Iterator[CepMatch] = {
-    val out = ListBuffer.empty[CepMatch]
-    val s = runNext(pattern, withinMs, nextStages, notNext)(k, events,
-      state.getOption.getOrElse(CepNextState(0, 0L, fr = false)), out)
     state.update(s)
     out.iterator
   }
@@ -210,11 +182,6 @@ object CepStream {
       s"notNext stages must be in 1..${pattern.length - 1}")
     require(notNext.keySet.intersect(nextStages).isEmpty,
       "a stage cannot be both strict and notNext-banned")
-    // same dispatcher as [[attach]] (r13 item 4): the tws twin runs the
-    // SAME runNext body — CepStreamTwsSpec pins record-for-record parity
-    if (StateImpl.useTws(ds.sparkSession))
-      return CepStreamTws.attachNext(ds, pattern, withinMs, nextStages,
-        notNext.map { case (i, ts) => i -> ts.toSet })
     import ds.sparkSession.implicits._
     ds.groupByKey(_.k)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
@@ -244,47 +211,24 @@ object CepStream {
       withinMs, _.tms, _.oid)(
       k, events.toSeq.sortBy(e => (e.tms, e.oid, e.ty)).iterator, state)
 
-  /** [[matchGroupTimes]]'s run body for the tws twin — the same ty
-    * pre-sort feeding [[runPred]]. */
-  private[streaming] def runTimes(pattern: IndexedSeq[(String, Int, Int)],
-      withinMs: Long)(k: Long, events: Iterator[CepEvent],
-      init: CepTimesState, out: ListBuffer[CepMatch]): CepTimesState =
-    runPred[CepEvent](
-      pattern.map { case (t, mn, mx) => (((e: CepEvent) => e.ty == t), mn, mx) },
-      withinMs, _.tms, _.oid)(
-      k, events.toSeq.sortBy(e => (e.tms, e.oid, e.ty)).iterator, init, out)
-
   /** [[matchGroupTimes]] generalized to PREDICATE stages — the step
     * semantics are [[graft.ops.Cep.TimesStepper]]'s (shared with the batch
     * sorted-iterator plan, so batch and stream cannot drift). Sorts the
     * batch's group by (tms, oid) and runs the stepper from stored state. */
-  /** The quantified/predicate step loop — ONE body shared by the fMGWS
-    * wrapper below and the tws twins ([[CepStreamTws.attachTimes]] /
-    * [[CepStreamTws.attachWhere]]). */
-  private[streaming] def runPred[E](
-      pattern: IndexedSeq[(E => Boolean, Int, Int)], withinMs: Long,
-      tmsOf: E => Long, oidOf: E => Long)(
-      k: Long, events: Iterator[E], init: CepTimesState,
-      out: ListBuffer[CepMatch]): CepTimesState = {
-    val stepper =
-      new graft.ops.Cep.TimesStepper[E](pattern, withinMs, tmsOf)
-    val sorted = events.toSeq.sortBy(e => (tmsOf(e), oidOf(e)))
-    var s = init
-    sorted.foreach { e =>
-      val next = stepper.step(s.st, s.c, s.t0, e,
-        (st0, en) => out += CepMatch(k, st0, en))
-      s = CepTimesState(next._1, next._2, next._3)
-    }
-    s
-  }
-
   def matchGroupPred[E](pattern: IndexedSeq[(E => Boolean, Int, Int)],
       withinMs: Long, tmsOf: E => Long, oidOf: E => Long)(
       k: Long, events: Iterator[E],
       state: GroupState[CepTimesState]): Iterator[CepMatch] = {
     val out = ListBuffer.empty[CepMatch]
-    val s = runPred(pattern, withinMs, tmsOf, oidOf)(k, events,
-      state.getOption.getOrElse(CepTimesState(0, 0, 0L)), out)
+    val stepper =
+      new graft.ops.Cep.TimesStepper[E](pattern, withinMs, tmsOf)
+    val sorted = events.toSeq.sortBy(e => (tmsOf(e), oidOf(e)))
+    var s = state.getOption.getOrElse(CepTimesState(0, 0, 0L))
+    sorted.foreach { e =>
+      val next = stepper.step(s.st, s.c, s.t0, e,
+        (st0, en) => out += CepMatch(k, st0, en))
+      s = CepTimesState(next._1, next._2, next._3)
+    }
     state.update(s)
     out.iterator
   }
@@ -296,8 +240,6 @@ object CepStream {
   def attachTimes(ds: Dataset[CepEvent], pattern: Seq[(String, Int, Int)],
       withinMs: Long): Dataset[CepMatch] = {
     graft.ops.Cep.validateTimes(pattern, withinMs)
-    if (StateImpl.useTws(ds.sparkSession))
-      return CepStreamTws.attachTimes(ds, pattern, withinMs)
     import ds.sparkSession.implicits._
     ds.groupByKey(_.k)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
@@ -316,33 +258,22 @@ object CepStream {
     * carry over the boundary: the end of batch N and the start of batch
     * N+1 are adjacent in the concatenation. Feed it the UNFILTERED keyed
     * stream — any event can break a loop. */
-  /** The consecutive-loop step loop — ONE body shared by the fMGWS
-    * wrapper below and the tws twin ([[CepStreamTws.attachTimesConsecutive]]). */
-  private[streaming] def runConsec(pattern: IndexedSeq[(String, Int, Int)],
-      withinMs: Long, consecutive: Set[Int])(
-      k: Long, events: Iterator[CepEvent], init: CepConsecState,
-      out: ListBuffer[CepMatch]): CepConsecState = {
-    val preds = pattern.map { case (t, mn, mx) =>
-      (((e: CepEvent) => e.ty == t), mn, mx) }.toIndexedSeq
-    val stepper = new graft.ops.Cep.ConsecStepper[CepEvent](preds,
-      withinMs, consecutive, _.tms)
-    val sorted = events.toSeq.sortBy(e => (e.tms, e.oid, e.ty))
-    var s = init
-    sorted.foreach { e =>
-      val next = stepper.step(s.st, s.c, s.cl, s.t0, e,
-        (st0, en) => out += CepMatch(k, st0, en))
-      s = CepConsecState(next._1, next._2, next._3, next._4)
-    }
-    s
-  }
-
   def matchGroupTimesConsecutive(pattern: IndexedSeq[(String, Int, Int)],
       withinMs: Long, consecutive: Set[Int])(
       k: Long, events: Iterator[CepEvent],
       state: GroupState[CepConsecState]): Iterator[CepMatch] = {
     val out = ListBuffer.empty[CepMatch]
-    val s = runConsec(pattern, withinMs, consecutive)(k, events,
-      state.getOption.getOrElse(CepConsecState(0, 0, cl = false, 0L)), out)
+    val preds = pattern.map { case (t, mn, mx) =>
+      (((e: CepEvent) => e.ty == t), mn, mx) }.toIndexedSeq
+    val stepper = new graft.ops.Cep.ConsecStepper[CepEvent](preds,
+      withinMs, consecutive, _.tms)
+    val sorted = events.toSeq.sortBy(e => (e.tms, e.oid, e.ty))
+    var s = state.getOption.getOrElse(CepConsecState(0, 0, cl = false, 0L))
+    sorted.foreach { e =>
+      val next = stepper.step(s.st, s.c, s.cl, s.t0, e,
+        (st0, en) => out += CepMatch(k, st0, en))
+      s = CepConsecState(next._1, next._2, next._3, next._4)
+    }
     state.update(s)
     out.iterator
   }
@@ -358,9 +289,6 @@ object CepStream {
       "no consecutive stages — use attachTimes (pre-filtered scan)")
     require(consecutive.forall(i => i >= 0 && i < pattern.length),
       s"consecutive stages must be in 0..${pattern.length - 1}")
-    if (StateImpl.useTws(ds.sparkSession))
-      return CepStreamTws.attachTimesConsecutive(ds, pattern, withinMs,
-        consecutive)
     import ds.sparkSession.implicits._
     ds.groupByKey(_.k)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
@@ -373,35 +301,25 @@ object CepStream {
     * stop event reveals). */
   final case class CepUntilState(st: Int, c: Int, t0: Long, te: Long)
 
-  /** The until-closed step loop — ONE body shared by the fMGWS wrapper
-    * below and the tws twin ([[CepStreamTws.attachUntil]]); the stepper
-    * is [[graft.ops.Cep.UntilStepper]], shared with the batch sorted
-    * plan, so the three forms cannot drift. */
-  private[streaming] def runUntil(pattern: IndexedSeq[(String, Int, Int)],
-      withinMs: Long, untilType: String)(
-      k: Long, events: Iterator[CepEvent], init: CepUntilState,
-      out: ListBuffer[CepMatch]): CepUntilState = {
-    val preds = pattern.map { case (t, mn, mx) =>
-      (((e: CepEvent) => e.ty == t), mn, mx) }.toIndexedSeq
-    val stepper = new graft.ops.Cep.UntilStepper[CepEvent](preds,
-      withinMs, _.ty == untilType, _.tms)
-    val sorted = events.toSeq.sortBy(e => (e.tms, e.oid, e.ty))
-    var s = init
-    sorted.foreach { e =>
-      val next = stepper.step(s.st, s.c, s.t0, s.te, e,
-        (st0, en) => out += CepMatch(k, st0, en))
-      s = CepUntilState(next._1, next._2, next._3, next._4)
-    }
-    s
-  }
-
+  /** One micro-batch group for the until-closed loop automaton — the
+    * stepper is [[graft.ops.Cep.UntilStepper]], shared with the batch
+    * sorted plan, so the forms cannot drift. */
   def matchGroupUntil(pattern: IndexedSeq[(String, Int, Int)],
       withinMs: Long, untilType: String)(
       k: Long, events: Iterator[CepEvent],
       state: GroupState[CepUntilState]): Iterator[CepMatch] = {
     val out = ListBuffer.empty[CepMatch]
-    val s = runUntil(pattern, withinMs, untilType)(k, events,
-      state.getOption.getOrElse(CepUntilState(0, 0, 0L, 0L)), out)
+    val preds = pattern.map { case (t, mn, mx) =>
+      (((e: CepEvent) => e.ty == t), mn, mx) }.toIndexedSeq
+    val stepper = new graft.ops.Cep.UntilStepper[CepEvent](preds,
+      withinMs, _.ty == untilType, _.tms)
+    val sorted = events.toSeq.sortBy(e => (e.tms, e.oid, e.ty))
+    var s = state.getOption.getOrElse(CepUntilState(0, 0, 0L, 0L))
+    sorted.foreach { e =>
+      val next = stepper.step(s.st, s.c, s.t0, s.te, e,
+        (st0, en) => out += CepMatch(k, st0, en))
+      s = CepUntilState(next._1, next._2, next._3, next._4)
+    }
     state.update(s)
     out.iterator
   }
@@ -414,8 +332,6 @@ object CepStream {
   def attachUntil(ds: Dataset[CepEvent], pattern: Seq[(String, Int, Int)],
       untilType: String, withinMs: Long): Dataset[CepMatch] = {
     graft.ops.Cep.validateUntil(pattern, untilType, withinMs)
-    if (StateImpl.useTws(ds.sparkSession))
-      return CepStreamTws.attachUntil(ds, pattern, untilType, withinMs)
     import ds.sparkSession.implicits._
     ds.groupByKey(_.k)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
@@ -443,8 +359,6 @@ object CepStream {
     graft.ops.Cep.validateTimes(
       stages.zipWithIndex.map { case ((_, mn, mx), i) => (s"stage$i", mn, mx) },
       withinMs)
-    if (StateImpl.useTws(ds.sparkSession))
-      return CepStreamTws.attachWhere(ds, key, tms, oid, stages, withinMs)
     import ds.sparkSession.implicits._
     ds.groupByKey(key)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
@@ -461,13 +375,12 @@ object CepStream {
   /** One micro-batch group for the ITERATIVE automaton — the shared
     * stepper with each stage predicate receiving (event, captured opener).
     * The capture persists in state across batches. */
-  /** The iterative-condition step loop — ONE body shared by the fMGWS
-    * wrapper below and the tws twin ([[CepStreamTws.attachIter]]). */
-  private[streaming] def runIter[E](
-      stages: IndexedSeq[((E, E) => Boolean, Int, Int)], withinMs: Long,
-      tmsOf: E => Long, oidOf: E => Long)(
-      k: Long, events: Iterator[E], init: CepIterState[E],
-      out: ListBuffer[CepMatch]): CepIterState[E] = {
+  def matchGroupIter[E](stages: IndexedSeq[((E, E) => Boolean, Int, Int)],
+      withinMs: Long, tmsOf: E => Long, oidOf: E => Long)(
+      k: Long, events: Iterator[E],
+      state: GroupState[CepIterState[E]]): Iterator[CepMatch] = {
+    val out = ListBuffer.empty[CepMatch]
+    val init = state.getOption.getOrElse(CepIterState[E](0, 0, 0L, None))
     var f0 = init.f0
     // stage 0's predicate receives the event ITSELF as the opener (it IS
     // first if it opens — the batch API rejects first.* at stage 0, here
@@ -485,17 +398,7 @@ object CepStream {
         (st0, en) => out += CepMatch(k, st0, en))
       st = next._1; c = next._2; t0 = next._3
     }
-    CepIterState[E](st, c, t0, f0)
-  }
-
-  def matchGroupIter[E](stages: IndexedSeq[((E, E) => Boolean, Int, Int)],
-      withinMs: Long, tmsOf: E => Long, oidOf: E => Long)(
-      k: Long, events: Iterator[E],
-      state: GroupState[CepIterState[E]]): Iterator[CepMatch] = {
-    val out = ListBuffer.empty[CepMatch]
-    val s = runIter(stages, withinMs, tmsOf, oidOf)(k, events,
-      state.getOption.getOrElse(CepIterState[E](0, 0, 0L, None)), out)
-    state.update(s)
+    state.update(CepIterState[E](st, c, t0, f0))
     out.iterator
   }
 
@@ -514,8 +417,6 @@ object CepStream {
     graft.ops.Cep.validateTimes(
       stages.zipWithIndex.map { case ((_, mn, mx), i) => (s"stage$i", mn, mx) },
       withinMs)
-    if (StateImpl.useTws(ds.sparkSession))
-      return CepStreamTws.attachIter(ds, key, tms, oid, stages, withinMs)
     import ds.sparkSession.implicits._
     implicit val stateEnc: org.apache.spark.sql.Encoder[CepIterState[E]] =
       org.apache.spark.sql.Encoders.product[CepIterState[E]]
@@ -645,11 +546,6 @@ object CepStream {
     val wm = ds.withColumn("__et", timestamp_millis(col("tms")))
       .withWatermark("__et", wmDelay)
       .as[CepEvent]
-    // tws twin: the run set on named state, pruning via explicit
-    // event-time timers over the same watermark
-    if (StateImpl.useTws(ds.sparkSession))
-      return CepStreamTws.attachSkipNextWatermarked(wm, pattern, withinMs,
-        maxActiveRuns)
     wm.groupByKey(_.k)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(
@@ -671,12 +567,11 @@ object CepStream {
     * still rewinds into its buffered stage-`skipTo` segment, so the
     * concatenation of per-batch runs equals the batch operator under
     * the per-key event-time-order contract. */
-  /** The skip-to-first/last step loop — ONE body shared by the fMGWS
-    * wrapper below and the tws twin ([[CepStreamTws.attachSkipTo]]). */
-  private[streaming] def runSkipTo(pattern: IndexedSeq[String],
-      withinMs: Long, skipTo: Int)(
-      k: Long, events: Iterator[CepEvent], init: CepSkipToState,
-      out: ListBuffer[CepMatch]): CepSkipToState = {
+  def matchGroupSkipTo(pattern: IndexedSeq[String], withinMs: Long,
+      skipTo: Int)(k: Long, events: Iterator[CepEvent],
+      state: GroupState[CepSkipToState]): Iterator[CepMatch] = {
+    val out = ListBuffer.empty[CepMatch]
+    val init = state.getOption.getOrElse(CepSkipToState(0, 0L, Nil))
     val runner = new graft.ops.Cep.SkipToRunner(pattern, withinMs, skipTo)
     runner.st = init.st; runner.t0 = init.t0
     init.buf.foreach(b => runner.buf.append((b.tms, b.oid, b.ty)))
@@ -684,17 +579,8 @@ object CepStream {
       runner.feed(e.tms, e.oid, e.ty,
         (s, en) => out += CepMatch(k, s, en))
     }
-    CepSkipToState(runner.st, runner.t0,
-      runner.buf.toSeq.map { case (t, o, ty) => CepEvBuf(t, o, ty) })
-  }
-
-  def matchGroupSkipTo(pattern: IndexedSeq[String], withinMs: Long,
-      skipTo: Int)(k: Long, events: Iterator[CepEvent],
-      state: GroupState[CepSkipToState]): Iterator[CepMatch] = {
-    val out = ListBuffer.empty[CepMatch]
-    val s = runSkipTo(pattern, withinMs, skipTo)(k, events,
-      state.getOption.getOrElse(CepSkipToState(0, 0L, Nil)), out)
-    state.update(s)
+    state.update(CepSkipToState(runner.st, runner.t0,
+      runner.buf.toSeq.map { case (t, o, ty) => CepEvBuf(t, o, ty) }))
     out.iterator
   }
 
@@ -708,8 +594,6 @@ object CepStream {
     require(withinMs > 0, s"withinMs must be > 0, got $withinMs")
     require(skipTo >= 1 && skipTo < pattern.length,
       s"skipTo must be in 1..${pattern.length - 1}, got $skipTo")
-    if (StateImpl.useTws(ds.sparkSession))
-      return CepStreamTws.attachSkipTo(ds, pattern, withinMs, skipTo)
     import ds.sparkSession.implicits._
     ds.groupByKey(_.k)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
@@ -733,11 +617,11 @@ object CepStream {
   /** One micro-batch group for the MATCH-PAYLOAD automaton — the shared
     * [[graft.ops.Cep.SelectStepper]] with the per-stage event buffer
     * persisted in keyed state across batches. */
-  /** The match-payload step loop — ONE body shared by the fMGWS wrapper
-    * below and the tws twin ([[CepStreamTws.attachSelect]]). */
-  private[streaming] def runSelect(pattern: IndexedSeq[String],
-      withinMs: Long)(k: Long, events: Iterator[CepEvent],
-      init: CepSelState, out: ListBuffer[CepSelMatch]): CepSelState = {
+  def matchGroupSelect(pattern: IndexedSeq[String], withinMs: Long)(
+      k: Long, events: Iterator[CepEvent],
+      state: GroupState[CepSelState]): Iterator[CepSelMatch] = {
+    val out = ListBuffer.empty[CepSelMatch]
+    val init = state.getOption.getOrElse(CepSelState(0, 0L, 0, Nil))
     val stepper = new graft.ops.Cep.SelectStepper(pattern, withinMs)
     val sorted = events.toSeq.sortBy(e => (e.tms, e.oid, e.ty))
     val es = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
@@ -752,16 +636,8 @@ object CepStream {
       })
       st = next._1; t0 = next._2
     }
-    CepSelState(st, t0, n, es.map { case (t, o) => CepEvRef(t, o) }.toSeq)
-  }
-
-  def matchGroupSelect(pattern: IndexedSeq[String], withinMs: Long)(
-      k: Long, events: Iterator[CepEvent],
-      state: GroupState[CepSelState]): Iterator[CepSelMatch] = {
-    val out = ListBuffer.empty[CepSelMatch]
-    val s = runSelect(pattern, withinMs)(k, events,
-      state.getOption.getOrElse(CepSelState(0, 0L, 0, Nil)), out)
-    state.update(s)
+    state.update(
+      CepSelState(st, t0, n, es.map { case (t, o) => CepEvRef(t, o) }.toSeq))
     out.iterator
   }
 
@@ -775,8 +651,6 @@ object CepStream {
       withinMs: Long): Dataset[CepSelMatch] = {
     require(pattern.nonEmpty, "pattern must not be empty")
     require(withinMs > 0, s"withinMs must be > 0, got $withinMs")
-    if (StateImpl.useTws(ds.sparkSession))
-      return CepStreamTws.attachSelect(ds, pattern, withinMs)
     import ds.sparkSession.implicits._
     ds.groupByKey(_.k)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
@@ -787,8 +661,8 @@ object CepStream {
     * repeats whole, exactly `times` times, within one window: the same
     * lossless unroll delegation as the batch operator (`Seq.fill(times)
     * (group).flatten` through [[attach]]), so the stream form inherits
-    * the batch semantics, the tws dispatch, AND the unroll argument —
-    * the three drive forms cannot drift because they are one operator. */
+    * the batch semantics AND the unroll argument — the three drive forms
+    * cannot drift because they are one operator. */
   def attachGroup(ds: Dataset[CepEvent], group: Seq[String], times: Int,
       withinMs: Long): Dataset[CepMatch] = {
     require(group.nonEmpty, "group must not be empty")
@@ -810,13 +684,13 @@ object CepStream {
     * family persists across micro-batches through keyed state, per-event
     * semantics are the shared [[graft.ops.Cep.NfaStepper]] — one step
     * object with the batch sorted plan, so stream and batch cannot
-    * drift. */
-  /** The branching-NFA step loop — ONE body shared by the fMGWS wrapper
-    * below and the tws twin ([[CepStreamTws.attachTimesNfa]]); an empty
-    * branch family returns an EMPTY state (the caller removes it). */
-  private[streaming] def runNfa(pattern: IndexedSeq[(String, Int, Int)],
-      withinMs: Long)(k: Long, events: Iterator[CepEvent],
-      init: CepNfaState, out: ListBuffer[CepMatch]): CepNfaState = {
+    * drift. An emptied branch family removes the key's state. */
+  def matchGroupTimesNfa(pattern: IndexedSeq[(String, Int, Int)],
+      withinMs: Long)(
+      k: Long, events: Iterator[CepEvent],
+      state: GroupState[CepNfaState]): Iterator[CepMatch] = {
+    val out = ListBuffer.empty[CepMatch]
+    val init = state.getOption.getOrElse(CepNfaState(Nil, 0L))
     val preds = pattern.map { case (t, mn, mx) =>
       (((e: CepEvent) => e.ty == t), mn, mx) }
     val sorted = events.toSeq.sortBy(e => (e.tms, e.oid, e.ty))
@@ -827,18 +701,9 @@ object CepStream {
       val next = stepper.step(br, t0, e, (s, en) => out += CepMatch(k, s, en))
       br = next._1; t0 = next._2
     }
-    CepNfaState(br.toSeq.sorted.map { case (st, c) => CepNfaBranch(st, c) }, t0)
-  }
-
-  def matchGroupTimesNfa(pattern: IndexedSeq[(String, Int, Int)],
-      withinMs: Long)(
-      k: Long, events: Iterator[CepEvent],
-      state: GroupState[CepNfaState]): Iterator[CepMatch] = {
-    val out = ListBuffer.empty[CepMatch]
-    val s = runNfa(pattern, withinMs)(k, events,
-      state.getOption.getOrElse(CepNfaState(Nil, 0L)), out)
-    if (s.branches.isEmpty) { if (state.exists) state.remove() }
-    else state.update(s)
+    if (br.isEmpty) { if (state.exists) state.remove() }
+    else state.update(
+      CepNfaState(br.toSeq.sorted.map { case (st, c) => CepNfaBranch(st, c) }, t0))
     out.iterator
   }
 
@@ -850,8 +715,6 @@ object CepStream {
   def attachTimesNfa(ds: Dataset[CepEvent],
       pattern: Seq[(String, Int, Int)], withinMs: Long): Dataset[CepMatch] = {
     graft.ops.Cep.validateTimes(pattern, withinMs, warnOverlap = false)
-    if (StateImpl.useTws(ds.sparkSession))
-      return CepStreamTws.attachTimesNfa(ds, pattern, withinMs)
     import ds.sparkSession.implicits._
     ds.groupByKey(_.k)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
@@ -860,15 +723,7 @@ object CepStream {
 
   /** Attach the automaton to a keyed event stream. Pre-filter to the
     * pattern's types before calling (the batch twin does; non-pattern
-    * events never change state, they only cost shuffle).
-    *
-    * Dispatches to the `transformWithState` twin ([[CepStreamTws]])
-    * exactly when the engine's keyed-state policy says so
-    * ([[StateImpl.useTws]] — AUTO under the RocksDB provider, conf
-    * override respected): the r12 verdict's item 4, the CEP stream
-    * surface honoring the same dispatcher as IsNewFix/TtlState. The two
-    * forms share the step loop ([[runBasic]]) and are pinned
-    * record-for-record equal by CepStreamTwsSpec. */
+    * events never change state, they only cost shuffle). */
   def attach(ds: Dataset[CepEvent], pattern: Seq[String],
       withinMs: Long): Dataset[CepMatch] = {
     require(pattern.nonEmpty, "pattern must not be empty")
@@ -876,8 +731,6 @@ object CepStream {
     // non-positive window; here it would silently abandon every
     // multi-stage partial instead
     require(withinMs > 0, s"withinMs must be > 0, got $withinMs")
-    if (StateImpl.useTws(ds.sparkSession))
-      return CepStreamTws.attach(ds, pattern, withinMs)
     import ds.sparkSession.implicits._
     ds.groupByKey(_.k)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(

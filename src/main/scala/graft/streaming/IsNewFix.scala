@@ -21,6 +21,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * inside a micro-batch are applied in (ts, event_id) order so results are
   * deterministic and equal to [[graft.ops.Stateful.isNewFixBatch]] on a
   * complete replay.
+  *
+  * Runs on every state-store provider (the HDFS-backed default and
+  * RocksDB); the provider is a deployment setting, not a code path.
   */
 object IsNewFix {
 
@@ -64,13 +67,6 @@ object IsNewFix {
     if (st != null) state.update(st)
     out.iterator
   }
-
-  /** ENGINE-DEFAULT entry point: dispatch to the `transformWithState` twin
-    * ([[IsNewFixTws]]) when [[StateImpl.useTws]] says the session supports
-    * it, else this legacy form — the two are record-for-record equal
-    * (`IsNewFixTwsSpec`), so the choice is purely a state-backend one. */
-  def auto(events: Dataset[LogEvent])(implicit spark: SparkSession): Dataset[FixedEvent] =
-    if (StateImpl.useTws(spark)) IsNewFixTws(events) else apply(events)
 
   /** Apply the repair to a (possibly streaming) Dataset of log events. The
     * day boundary follows `spark.sql.session.timeZone`, matching the batch

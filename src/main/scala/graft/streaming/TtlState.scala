@@ -22,22 +22,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * per batch — the same asymptotics as Flink's RocksDB TTL state. Use the
   * watermark-bounded built-in join where event-time retention is acceptable
   * (SURVEY §7.3); use this where the reference's processing-time contract
-  * matters.
+  * matters. Like every keyed operator here it runs on any state-store
+  * provider (HDFS-backed default or RocksDB).
   */
 object TtlState {
-
-  /** ENGINE-DEFAULT entry point: dispatch to the `transformWithState` twin
-    * ([[TtlStateTws]]) when [[StateImpl.useTws]] says the session supports
-    * it, else the legacy fMGWS form — pair-for-pair equal
-    * (`TtlStateTwsSpec`), so the choice is purely a state-backend one. */
-  def ttlJoinAuto[K, L, R](left: Dataset[(K, L)], right: Dataset[(K, R)],
-      ttl: FiniteDuration)(implicit
-      kEnc: Encoder[K], lEnc: Encoder[L], rEnc: Encoder[R],
-      tagEnc: Encoder[(K, Option[L], Option[R])],
-      bufEnc: Encoder[(List[L], List[R])],
-      outEnc: Encoder[(K, L, R)]): Dataset[(K, L, R)] =
-    if (StateImpl.useTws(left.sparkSession)) TtlStateTws.ttlJoin(left, right, ttl)
-    else ttlJoin(left, right, ttl)
 
   /** Streaming inner equi-join with idle-state TTL. Emits one row per
     * (left, right) pair whose arrivals both happen while the key is live;

@@ -4,9 +4,8 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Generic per-query job-attribution probe (optimization round 15, guide
   * §1/§7): runs named `SparkEntry.queries` twice (pass 1 absorbs JIT) and
@@ -33,16 +32,9 @@ object QueryJobProbe {
       .filter(_.contains("=")).map { kv =>
         val Array(k, v) = kv.split("=", 2); (k, v)
       }
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val b0 = GraftSession.builder(Some(s"local[$cpus]"), Some(cpus.toInt))
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", aqe.toString)
-      // match the production sessions (see Bench) so probe walls are the
-      // walls the bench pays
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
     val spark = extra.foldLeft(b0) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -24,20 +24,37 @@ trait SparkSpec extends AnyFunSuite {
     }
     got
   }
+
+  /** Run `body` with the session's state-store provider set to `provider`
+    * (None = Spark's HDFS-backed default). A streaming query reads the
+    * provider when it starts, so only queries started inside `body` use it. */
+  def withStateStore[A](provider: Option[String])(body: => A): A = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    provider.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Run `drive` once per state-store provider (default, then RocksDB),
+    * assert both runs agree, and return the result. */
+  def onEveryStateStore[A](drive: => A): A = {
+    val default = withStateStore(None)(drive)
+    val rocks = withStateStore(Some(SparkSpec.RocksDbProvider))(drive)
+    assert(rocks == default,
+      s"RocksDB run differs from the default provider:\n  rocksdb $rocks\n  default $default")
+    rocks
+  }
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  // the production builder: plans the suite asserts on must be the plans
+  // the engine ships with
+  lazy val session: SparkSession = GraftSession.builder(Some("local[4]"), Some(4))
     .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // match the production sessions (Bench/Verify/GraftSession): plans the
-    // suite asserts on must be the plans the engine ships with
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.codegen.cache.maxEntries", "10000")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
     .getOrCreate()
 }

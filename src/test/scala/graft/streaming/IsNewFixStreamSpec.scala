@@ -10,10 +10,15 @@ import graft.streaming.IsNewFix.LogEvent
 /** T5 streaming form: flatMapGroupsWithState state rules across micro-batches,
   * and equivalence with the batch window form — including the mixed-is_new
   * case where a mid's first event claims is_new=0 (state backfills to
-  * yesterday, so a same-day is_new=1 must still be rewritten to 0). */
+  * yesterday, so a same-day is_new=1 must still be rewritten to 0). Every
+  * streaming run goes through both state-store providers (the HDFS-backed
+  * default and RocksDB), which must agree record for record. */
 class IsNewFixStreamSpec extends SparkSpec {
 
-  private def run(batches: Seq[Seq[LogEvent]]): Map[Long, String] = {
+  private def run(batches: Seq[Seq[LogEvent]]): Map[Long, String] =
+    onEveryStateStore(runOnce(batches))
+
+  private def runOnce(batches: Seq[Seq[LogEvent]]): Map[Long, String] = {
     val s = spark
     import s.implicits._
     implicit val sp: org.apache.spark.sql.SparkSession = s
@@ -50,10 +55,16 @@ class IsNewFixStreamSpec extends SparkSpec {
       LogEvent("B", "1", d2, 5),    // B's state = yesterday(d1) ≠ today → 0
       LogEvent("C", "1", d2, 6)))   // brand new → 1
 
+  private val syntheticFixed = Map(1L -> "1", 2L -> "1", 3L -> "0", 4L -> "0",
+    5L -> "0", 6L -> "1", 7L -> "0", 8L -> "0")
+
   test("state rules across micro-batches match the reference's ValueState logic") {
-    val got = run(synthetic)
-    assert(got == Map(1L -> "1", 2L -> "1", 3L -> "0", 4L -> "0", 5L -> "0",
-      6L -> "1", 7L -> "0", 8L -> "0"))
+    assert(withStateStore(None)(runOnce(synthetic)) == syntheticFixed)
+  }
+
+  test("state rules hold on the RocksDB state store") {
+    assert(withStateStore(Some(SparkSpec.RocksDbProvider))(runOnce(synthetic)) ==
+      syntheticFixed)
   }
 
   test("batch window form equals streaming on mixed-is_new mids") {

@@ -104,4 +104,62 @@ class StreamJoinSpec extends SparkSpec {
       assert(got.get(base + 10000) == Some(1L), s"second window: $got")
     } finally q.stop()
   }
+
+  test("idle input: under the min watermark policy the join's watermark stalls") {
+    // Watermarks in Stream Processing Systems (VLDB 2021): an operator with
+    // several inputs takes the MIN of their watermarks, so one idle input
+    // holds the global watermark back. Spark's default
+    // multipleWatermarkPolicy is "min"; "max" lets the busy input drive it.
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    val policyKey = "spark.sql.streaming.multipleWatermarkPolicy"
+    val hour = 3600000L
+
+    /** Orders go idle after the first batch while payments move two hours
+      * ahead; returns (watermark ms, join state rows) after each later batch. */
+    def run(policy: Option[String]): Seq[(Long, Long)] = {
+      val pay = MemoryStream[(Long, Long, Timestamp)]
+      val ord = MemoryStream[(Long, Long, Timestamp)]
+      val p = pay.toDF().toDF("p_id", "p_key", "p_time")
+        .withWatermark("p_time", "5 seconds")
+        .withColumn("p_ms", unix_millis(col("p_time")))
+      val o = ord.toDF().toDF("o_id", "o_key", "o_time")
+        .withWatermark("o_time", "5 seconds")
+        .withColumn("o_ms", unix_millis(col("o_time")))
+      val joined = graft.ops.Joins.interval(p, o, (col("p_key"), col("o_key")),
+          (col("p_ms"), col("o_ms")), 15 * 60 * 1000L, 5000L)
+        .select(col("p_id"), col("o_id"))
+      policy.foreach(s.conf.set(policyKey, _))
+      val q = try joined.writeStream.format("memory").queryName("idle_out")
+          .outputMode("append").start()
+        finally s.conf.unset(policyKey)
+      def progress(): (Long, Long) = {
+        val lp = q.lastProgress
+        (java.time.Instant.parse(lp.eventTime.get("watermark")).toEpochMilli,
+          lp.stateOperators.map(_.numRowsTotal).sum)
+      }
+      try {
+        ord.addData((100L, 1L, ts(base)))
+        pay.addData((200L, 1L, ts(base + 1000)))
+        q.processAllAvailable()
+        val later = Seq(201L -> hour, 202L -> 2 * hour).map { case (id, dt) =>
+          pay.addData((id, id, ts(base + dt))) // orders stay idle
+          q.processAllAvailable()
+          progress()
+        }
+        assert(s.table("idle_out").collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((200L, 100L)))
+        later
+      } finally q.stop()
+    }
+
+    // default policy (min): the idle orders input pins the watermark at its
+    // own last event time minus the delay, and join state only grows
+    assert(s.conf.get(policyKey) == "min")
+    assert(run(None) == Seq((base - 5000, 3L), (base - 5000, 4L)))
+    // max: the payments input alone moves the watermark past the stall
+    val (wmMax, _) = run(Some("max")).last
+    assert(wmMax >= base + hour - 5000, s"max policy watermark $wmMax")
+  }
 }

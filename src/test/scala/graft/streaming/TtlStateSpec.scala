@@ -10,34 +10,47 @@ import graft.SparkSpec
   * probe finds nothing (Flink setIdleStateRetention semantics, which differ
   * from watermark eviction in being processing-time driven).
   *
+  * The same scenario runs once per state-store provider: the default
+  * HDFS-backed one and RocksDB.
+  *
   * NOTE: a query with registered processing-time timeouts re-triggers
   * batches continuously (the engine must poll for expiry), so
   * `processAllAvailable` never sees a quiesced stream — the spec polls the
-  * sink with deadlines instead, and paces batches with a real trigger. */
+  * sinks with deadlines instead, and paces batches with a real trigger. */
 class TtlStateSpec extends SparkSpec {
 
   test("join state survives within the TTL and is evicted after idling past it") {
+    evictionScenario(None, "ttl_join_out")
+  }
+
+  test("RocksDB join state survives within the TTL, evicted past it") {
+    evictionScenario(Some(SparkSpec.RocksDbProvider), "ttl_join_rocksdb_out")
+  }
+
+  private def evictionScenario(provider: Option[String], sink: String): Unit = {
     val s = spark
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
 
     val left = MemoryStream[(Long, String)]
     val right = MemoryStream[(Long, String)]
-    val joined = TtlState.ttlJoin(left.toDS(), right.toDS(), ttl = 8.seconds)
 
-    val q = joined.toDF("k", "l", "r").writeStream
-      .format("memory").queryName("ttl_join_out")
-      .outputMode("append").trigger(Trigger.ProcessingTime("200 milliseconds"))
-      .start()
+    val query = withStateStore(provider) {
+      TtlState.ttlJoin(left.toDS(), right.toDS(), ttl = 8.seconds)
+        .toDF("k", "l", "r").writeStream
+        .format("memory").queryName(sink)
+        .outputMode("append").trigger(Trigger.ProcessingTime("200 milliseconds"))
+        .start()
+    }
 
-    def rows(): Set[(Long, String, String)] =
-      s.table("ttl_join_out").collect()
+    def rows: Set[(Long, String, String)] =
+      s.table(sink).collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
     def awaitRows(expected: Set[(Long, String, String)], what: String): Unit = {
       val deadline = System.currentTimeMillis + 30000
-      while (System.currentTimeMillis < deadline && rows() != expected)
+      while (System.currentTimeMillis < deadline && rows != expected)
         Thread.sleep(200)
-      assert(rows() == expected, s"$what: got ${rows()}")
+      assert(rows == expected, s"$what ($sink): got $rows")
     }
 
     try {
@@ -55,11 +68,11 @@ class TtlStateSpec extends SparkSpec {
       // under idle-state TTL the buffer is gone, so no pair may be emitted
       right.addData((1L, "y"))
       Thread.sleep(3000) // bounded grace for a wrong emission to surface
-      assert(rows() == Set((1L, "a", "x")), s"evicted key must not rejoin: ${rows()}")
+      assert(rows == Set((1L, "a", "x")), s"evicted key must not rejoin ($sink): $rows")
 
       // but the fresh right row re-opened k1's buffers: a new left row joins
       left.addData((1L, "b"))
       awaitRows(Set((1L, "a", "x"), (1L, "b", "y")), "re-opened key join")
-    } finally q.stop()
+    } finally query.stop()
   }
 }
